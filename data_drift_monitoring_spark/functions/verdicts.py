@@ -7,7 +7,6 @@ decision trees mirror:
 - missing severity/recommendation: ``missing_values.py:63-69, 99-141``
 - duplicate severity/recommendation: ``duplicates.py:146-184``
 - outlier severity/recommendation: ``outliers.py:279-322``
-- PSI classification: ``README.md:49`` (0.1 / 0.25)
 """
 
 from __future__ import annotations
@@ -95,15 +94,6 @@ def outlier_recommendation(
         )
         .when(pct < t.outlier_clip_pct, "clip_bounds")
         .otherwise("investigate_data_quality")
-    )
-
-
-def psi_classification(psi: Column, t: Thresholds = _T) -> Column:
-    """README.md:49: <0.1 no drift, 0.1-0.25 moderate, >0.25 large."""
-    return (
-        F.when(psi < t.psi_moderate, "none")
-        .when(psi < t.psi_large, "moderate")
-        .otherwise("large")
     )
 
 

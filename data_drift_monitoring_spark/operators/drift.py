@@ -5,13 +5,16 @@ The reference's drift modules are 0-byte stubs
 promised semantics are in ``README.md:42-62``: KS two-sample test, PSI with
 0.1/0.25 thresholds, chi-square contingency, Jensen-Shannon divergence.
 
-Distributed shape: drift is computed from HISTOGRAMS, never raw rows. The
-current table contributes per-partition histograms (one aggregate); the
-reference snapshot histogram is tiny and broadcast (J4). Each statistic is
-then pure column algebra + a window cumsum over the ~O(bins) rows per
-(partition, column) group — an exact computation at any data scale. A global
-sort of 10^12 raw values for exact KS is impossible; per-value bins on a
-bounded int domain (n_tok ∈ [1, 2048]) make the binned ECDF exact
+Distributed shape: drift is computed from HISTOGRAMS, never raw rows. Spark
+aggregates the current table into per-partition histograms and the
+reference snapshot into one; both are bounded by partitions × bins rows
+whatever the row count (32 × (2048 + sources) for the flagship's n_tok and
+source). ``drift_stats`` collects the two histograms and finishes every
+statistic, p-value and flag on the driver with one numpy kernel
+(``_drift_from_counts``) per (partition, column) group, then returns the
+rows as a local relation — no Python worker, no window or join stages.
+Per-value bins on a bounded int domain (n_tok ∈ [1, 2048]) make the binned
+ECDF, and so KS, exact; a global sort of 10^12 raw values is never needed
 (SURVEY.md §7.4.4).
 
 Zero-bin convention (documented, mirrored by the DuckDB oracle in
@@ -22,187 +25,35 @@ samples and uses dof = nonzero_bins - 1.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
-from ..config import DEFAULT_CONFIG, EngineConfig
-from ..functions.verdicts import psi_classification
+from ..config import DEFAULT_CONFIG, EngineConfig, Thresholds
+from ..functions.pvalues import chi2_sf, ks_2samp_pvalue
 
 PSI_EPS = 1e-6
 
-
-def drift_stats(
-    cur_hist: DataFrame,
-    ref_hist: DataFrame,
-    partition_col: str | None = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Compare per-partition current histograms against a reference.
-
-    cur_hist: (part_id?, col, bin, cnt); ref_hist: (col, bin, cnt).
-
-    Returns one row per (part_id?, col):
-      n_cur, n_ref, psi, psi_drift, js_divergence, chi2_stat, chi2_dof,
-      ks_stat — every statistic exact given the histograms.
-    """
-    keys = [partition_col, "col"] if partition_col else ["col"]
-    ref = ref_hist.select("col", "bin", F.col("cnt").alias("ref_cnt"))
-    # the current histogram feeds three sub-plans (group list, bin universe,
-    # the join itself); it is O(partitions x bins) rows — cache it so the
-    # upstream aggregation over raw rows runs once
-    cur = cur_hist.select(*keys, "bin", F.col("cnt").alias("cur_cnt")).cache()
-
-    # bin universe per group = ref bins ∪ cur bins (ref side is broadcast)
-    groups = cur.select(*keys).distinct()
-    ref_bins = groups.join(
-        F.broadcast(ref.select("col", "bin")), on="col", how="inner"
-    ).select(*keys, "bin")
-    universe = ref_bins.unionByName(cur.select(*keys, "bin")).distinct()
-
-    m = (
-        universe.join(cur, on=[*keys, "bin"], how="left")
-        .join(F.broadcast(ref), on=["col", "bin"], how="left")
-        .fillna(0, subset=["cur_cnt", "ref_cnt"])
-    )
-
-    w = Window.partitionBy(*keys)
-    wo = (
-        Window.partitionBy(*keys)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    n_cur = F.sum("cur_cnt").over(w)
-    n_ref = F.sum("ref_cnt").over(w)
-    p = F.col("cur_cnt") / n_cur
-    q = F.col("ref_cnt") / n_ref
-    p_c = F.greatest(p, F.lit(PSI_EPS))
-    q_c = F.greatest(q, F.lit(PSI_EPS))
-    mid = (p + q) / 2
-
-    # chi-square 2×k contingency: E = row_total * col_total / grand_total
-    tot = F.col("cur_cnt") + F.col("ref_cnt")
-    e_cur = n_cur * tot / (n_cur + n_ref)
-    e_ref = n_ref * tot / (n_cur + n_ref)
-
-    terms = m.select(
-        *keys,
-        n_cur.alias("n_cur"),
-        n_ref.alias("n_ref"),
-        ((p - q) * F.log(p_c / q_c)).alias("psi_term"),
-        (
-            F.when(p > 0, 0.5 * p * F.log(p / mid)).otherwise(0.0)
-            + F.when(q > 0, 0.5 * q * F.log(q / mid)).otherwise(0.0)
-        ).alias("js_term"),
-        F.when(
-            tot > 0,
-            F.pow(F.col("cur_cnt") - e_cur, 2) / e_cur
-            + F.pow(F.col("ref_cnt") - e_ref, 2) / e_ref,
-        )
-        .otherwise(0.0)
-        .alias("chi2_term"),
-        (tot > 0).cast("long").alias("nonzero_bin"),
-        F.abs(
-            F.sum(F.col("cur_cnt")).over(wo) / n_cur
-            - F.sum(F.col("ref_cnt")).over(wo) / n_ref
-        ).alias("ecdf_gap"),
-    )
-
-    out = terms.groupBy(*keys).agg(
-        F.first("n_cur").alias("n_cur"),
-        F.first("n_ref").alias("n_ref"),
-        F.sum("psi_term").alias("psi"),
-        F.sum("js_term").alias("js_divergence"),
-        F.sum("chi2_term").alias("chi2_stat"),
-        (F.sum("nonzero_bin") - 1).alias("chi2_dof"),
-        F.max("ecdf_gap").alias("ks_stat"),
-    )
-    out = out.withColumn("psi_drift", psi_classification(F.col("psi")))
-    # same contract as plans.pipeline.build_verdicts: the cached histogram
-    # is tracked on the result so repeated callers (e.g. a long-lived
-    # service's detect_drift) can release it after materialization
-    out._cached_intermediates = [cur]
-    return out
+# per-(partition?, col) statistics, in output column order
+_STATS_SCHEMA = (
+    "n_cur long, n_ref long, psi double, js_divergence double, "
+    "ks_stat double, chi2_stat double, chi2_dof long, ks_pvalue double, "
+    "chi2_pvalue double, psi_drift string, ks_significant boolean, "
+    "chi2_significant boolean, drift_detected boolean"
+)
 
 
-def quantile_edges_from_hist(
-    ref_hist, col: str, bins: int = DEFAULT_CONFIG.drift_bins
-) -> list[float]:
-    """Quantile bin edges from a (tiny) reference per-value histogram.
-
-    PSI/chi-square are meaningless over thousands of sparse per-value bins
-    (expected counts ≪ 5; the epsilon clamp dominates). Standard PSI practice
-    bins by reference quantiles; the reference histogram is the broadcast-
-    small side, so computing edges driver-side is free. Returns the interior
-    edges (ascending, deduplicated).
-    """
-    rows = (
-        ref_hist.filter(F.col("col") == col)
-        .select(F.col("bin").cast("double").alias("v"), "cnt")
-        .orderBy("v")
-        .collect()
-    )
-    if not rows:
-        return []
-    import numpy as np
-
-    vals = np.array([r["v"] for r in rows])
-    cnts = np.array([r["cnt"] for r in rows], dtype=np.float64)
-    cum = np.cumsum(cnts) / cnts.sum()
-    targets = np.arange(1, bins) / bins
-    idx = np.searchsorted(cum, targets)
-    edges = sorted(set(vals[np.clip(idx, 0, len(vals) - 1)].tolist()))
-    return [float(e) for e in edges]
-
-
-def rebin_histogram(hist: DataFrame, col: str, edges: list[float]) -> DataFrame:
-    """Map a per-value histogram's numeric bins into coarse quantile buckets:
-    bucket = #edges ≤ value (a handful of literal comparisons — pure
-    codegen, no join). Non-matching cols pass through untouched."""
-    keys = [c for c in hist.columns if c not in ("col", "bin", "cnt")]
-    v = F.col("bin").cast("double")
-    bucket = sum((v > F.lit(e)).cast("int") for e in edges)
-    target = hist.filter(F.col("col") == col)
-    out = (
-        target.select(
-            *keys, "col", F.lpad(bucket.cast("string"), 6, "0").alias("bin"), "cnt"
-        )
-        .groupBy(*keys, "col", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    rest = hist.filter(F.col("col") != col)
-    return out.unionByName(rest.select(*keys, "col", "bin", "cnt"))
-
-
-def numeric_drift(
-    cur_fine: DataFrame,
-    ref_fine: DataFrame,
-    col: str,
-    partition_col: str | None = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Composite numeric drift: KS from the exact per-value histogram,
-    PSI/JS/chi-square from the quantile-rebinned histogram (both derived
-    from ONE scan's per-value aggregate — rebinning touches only the tiny
-    histogram rows)."""
-    keys = [partition_col, "col"] if partition_col else ["col"]
-    cur_fine = cur_fine.cache()  # feeds the fine KS pass and the rebin pass
-    edges = quantile_edges_from_hist(ref_fine, col, config.drift_bins)
-    fine = drift_stats(cur_fine, ref_fine, partition_col, config).select(
-        *keys, "n_cur", "n_ref", "ks_stat"
-    )
-    coarse = drift_stats(
-        rebin_histogram(cur_fine, col, edges),
-        rebin_histogram(ref_fine, col, edges),
-        partition_col,
-        config,
-    ).drop("ks_stat", "n_cur", "n_ref")
-    return fine.join(coarse, on=keys, how="inner")
+def psi_severity(psi: float, t: Thresholds = DEFAULT_CONFIG.thresholds) -> str:
+    """README.md:49: <0.1 no drift, 0.1-0.25 moderate, >0.25 large."""
+    if psi < t.psi_moderate:
+        return "none"
+    return "moderate" if psi < t.psi_large else "large"
 
 
 def _quantile_edges_from_counts(vals, cnts, bins: int) -> list[float]:
-    """numpy twin of ``quantile_edges_from_hist`` over (value, count) arrays."""
-    import numpy as np
-
+    """Interior reference-quantile edges (ascending, deduplicated) from
+    (value, count) arrays."""
     order = np.argsort(vals)
     vals, cnts = np.asarray(vals, float)[order], np.asarray(cnts, float)[order]
     cum = np.cumsum(cnts) / cnts.sum()
@@ -212,18 +63,13 @@ def _quantile_edges_from_counts(vals, cnts, bins: int) -> list[float]:
 
 
 def _drift_from_counts(
-    cur: dict, ref: dict, numeric: bool, bins: int
+    cur: dict, ref: dict, numeric: bool, config: EngineConfig = DEFAULT_CONFIG
 ) -> dict:
-    """All drift statistics for one (partition, column) group from two
-    bin→count dicts — numpy twin of the drift_stats/numeric_drift
-    composition (same universe, clamp, zero-bin and dof conventions):
-    KS from the fine per-value ECDF (exact on bounded int domains);
-    PSI/JS/chi-square on reference-quantile buckets for numeric columns,
-    raw categories otherwise; p-values from functions.pvalues."""
-    import numpy as np
-
-    from ..functions.pvalues import chi2_sf, ks_2samp_pvalue
-
+    """All drift statistics, p-values and flags for one (partition, column)
+    group from two bin→count dicts. The bin universe is cur ∪ ref bins in
+    bin order: KS from the fine per-value ECDF (exact on bounded int
+    domains); PSI/JS/chi-square on reference-quantile buckets for numeric
+    columns, raw categories otherwise; p-values from functions.pvalues."""
     all_bins = sorted(set(cur) | set(ref))
     c = np.array([float(cur.get(b, 0)) for b in all_bins])
     r = np.array([float(ref.get(b, 0)) for b in all_bins])
@@ -236,7 +82,7 @@ def _drift_from_counts(
 
     if numeric and ref:
         edges = _quantile_edges_from_counts(
-            [float(b) for b in ref], list(ref.values()), bins
+            [float(b) for b in ref], list(ref.values()), config.drift_bins
         )
         vals = np.array([float(b) for b in all_bins])
         bucket = np.searchsorted(np.array(edges), vals, side="left")
@@ -245,24 +91,28 @@ def _drift_from_counts(
         c = np.bincount(bucket, weights=c, minlength=nb)
         r = np.bincount(bucket, weights=r, minlength=nb)
 
-    p, q = c / n_cur, r / n_ref
-    p_c = np.maximum(p, PSI_EPS)
-    q_c = np.maximum(q, PSI_EPS)
-    psi = float(((p - q) * np.log(p_c / q_c)).sum())
-    mid = (p + q) / 2
     with np.errstate(divide="ignore", invalid="ignore"):
+        p, q = c / n_cur, r / n_ref
+        p_c = np.maximum(p, PSI_EPS)
+        q_c = np.maximum(q, PSI_EPS)
+        psi = float(((p - q) * np.log(p_c / q_c)).sum())
+        mid = (p + q) / 2
         js = float(
             np.where(p > 0, 0.5 * p * np.log(p / mid), 0.0).sum()
             + np.where(q > 0, 0.5 * q * np.log(q / mid), 0.0).sum()
         )
-    tot = c + r
-    nz = tot > 0
-    e_cur = n_cur * tot[nz] / (n_cur + n_ref)
-    e_ref = n_ref * tot[nz] / (n_cur + n_ref)
-    chi2 = float(
-        ((c[nz] - e_cur) ** 2 / e_cur + (r[nz] - e_ref) ** 2 / e_ref).sum()
-    )
+        tot = c + r
+        nz = tot > 0
+        e_cur = n_cur * tot[nz] / (n_cur + n_ref)
+        e_ref = n_ref * tot[nz] / (n_cur + n_ref)
+        chi2 = float(
+            ((c[nz] - e_cur) ** 2 / e_cur + (r[nz] - e_ref) ** 2 / e_ref).sum()
+        )
     dof = int(nz.sum()) - 1
+    t = config.thresholds
+    ks_p = ks_2samp_pvalue(ks, n_cur, n_ref)
+    chi2_p = chi2_sf(chi2, dof)
+    ks_sig, chi2_sig = bool(ks_p < t.ks_alpha), bool(chi2_p < t.chi2_alpha)
     return {
         "n_cur": int(n_cur),
         "n_ref": int(n_ref),
@@ -271,17 +121,68 @@ def _drift_from_counts(
         "ks_stat": ks,
         "chi2_stat": chi2,
         "chi2_dof": dof,
-        "ks_pvalue": ks_2samp_pvalue(ks, n_cur, n_ref),
-        "chi2_pvalue": chi2_sf(chi2, dof),
+        "ks_pvalue": ks_p,
+        "chi2_pvalue": chi2_p,
+        "psi_drift": psi_severity(psi, t),
+        "ks_significant": ks_sig,
+        "chi2_significant": chi2_sig,
+        "drift_detected": psi >= t.psi_moderate or ks_sig or chi2_sig,
     }
 
 
-_BROADCAST_SCHEMA = (
-    "part_id int, col string, n_cur long, n_ref long, psi double, "
-    "js_divergence double, ks_stat double, chi2_stat double, chi2_dof long, "
-    "ks_pvalue double, chi2_pvalue double, psi_drift string, "
-    "ks_significant boolean, chi2_significant boolean, drift_detected boolean"
-)
+def _collect_counts(hist: DataFrame, keys: list[str]) -> dict[tuple, dict]:
+    """(key values) → {bin: cnt} of a histogram frame, summed per bin."""
+    out: dict[tuple, dict] = {}
+    for *key, b, cnt in hist.select(*keys, "bin", "cnt").collect():
+        g = out.setdefault(tuple(key), {})
+        g[b] = g.get(b, 0) + cnt
+    return out
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[dict], schema: StructType
+) -> DataFrame:
+    """Driver-side rows as a DataFrame. Built from pandas so it plans as a
+    LocalTableScan; a list of Rows would plan as a Python-side RDD scan."""
+    pdf = pd.DataFrame(rows, columns=schema.names)
+    return spark.createDataFrame(pdf, schema)
+
+
+def drift_stats(
+    cur_hist: DataFrame,
+    ref_hist: DataFrame,
+    partition_col: str | None = "part_id",
+    config: EngineConfig = DEFAULT_CONFIG,
+    numeric_cols: frozenset | set = frozenset(),
+) -> DataFrame:
+    """Compare per-partition current histograms against a reference.
+
+    cur_hist: (part_id?, col, bin, cnt); ref_hist: (col, bin, cnt). Both
+    are collected — a histogram has at most keys × bins rows — and every
+    (part_id?, col) group of ``cur_hist`` gets one row:
+      n_cur, n_ref, psi, js_divergence, ks_stat, chi2_stat, chi2_dof,
+      ks_pvalue, chi2_pvalue, psi_drift, ks_significant, chi2_significant,
+      drift_detected — every statistic exact given the histograms.
+    Columns in ``numeric_cols`` carry per-value numeric bins: their PSI, JS
+    and chi-square use reference-quantile buckets (``config.drift_bins``),
+    their KS the per-value ECDF.
+    """
+    keys = [partition_col, "col"] if partition_col else ["col"]
+    ref = _collect_counts(ref_hist, ["col"])
+    rows = [
+        {
+            **dict(zip(keys, key)),
+            **_drift_from_counts(
+                cur, ref.get(key[-1:], {}), key[-1] in numeric_cols, config
+            ),
+        }
+        for key, cur in _collect_counts(cur_hist, keys).items()
+    ]
+    part = [cur_hist.schema[partition_col]] if partition_col else []
+    schema = StructType(
+        part + StructType.fromDDL(f"col string, {_STATS_SCHEMA}").fields
+    )
+    return _local_frame(cur_hist.sparkSession, rows, schema)
 
 
 def drift_stats_broadcast(
@@ -291,96 +192,9 @@ def drift_stats_broadcast(
     partition_col: str = "part_id",
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Single-stage drift: the reference histograms (tiny by construction)
-    are collected once and BROADCAST to executors; every statistic AND
-    p-value for a (partition, column) group is computed in one Arrow batch
-    by ``applyInPandas`` over that group's histogram rows. Replaces the
-    drift_stats→rebin→numeric_drift→with_drift_pvalues composition (~10
-    stages of windows/joins) with histogram-agg → one grouped UDF — the
-    shape SURVEY.md §2.10 mandates, and the one that scales: shuffled bytes
-    are O(partitions × bins), never O(rows)."""
-    import pandas as pd
-
-    spark = cur_hist.sparkSession
-    ref_map: dict[str, dict] = {}
-    for row in ref_hist.select("col", "bin", "cnt").collect():
-        ref_map.setdefault(row["col"], {})[row["bin"]] = (
-            ref_map.get(row["col"], {}).get(row["bin"], 0) + row["cnt"]
-        )
-    bc = spark.sparkContext.broadcast(ref_map)
-    t = config.thresholds
-    bins = config.drift_bins
-    numeric_cols = set(numeric_cols)
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id, col = key if len(key) == 2 else (None, key[0])
-        cur = dict(zip(pdf["bin"], pdf["cnt"]))
-        s = _drift_from_counts(
-            cur, bc.value.get(col, {}), col in numeric_cols, bins
-        )
-        s["part_id"] = part_id
-        s["col"] = col
-        s["psi_drift"] = (
-            "none"
-            if s["psi"] < t.psi_moderate
-            else ("moderate" if s["psi"] < t.psi_large else "large")
-        )
-        s["ks_significant"] = bool(s["ks_pvalue"] < t.ks_alpha)
-        s["chi2_significant"] = bool(s["chi2_pvalue"] < t.chi2_alpha)
-        s["drift_detected"] = bool(
-            s["psi"] >= t.psi_moderate
-            or s["ks_significant"]
-            or s["chi2_significant"]
-        )
-        return pd.DataFrame([s])
-
-    keys = [partition_col, "col"] if partition_col else ["col"]
-    out = cur_hist.groupBy(*keys).applyInPandas(fn, _BROADCAST_SCHEMA)
-    return out if partition_col else out.drop("part_id")
-
-
-def with_drift_pvalues(
-    drift: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Attach asymptotic p-values (KS, chi-square) via an Arrow-vectorized
-    pandas UDF over the tiny drift-stat rows (numpy implementations in
-    functions.pvalues — scipy-free), plus significance verdicts."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions.pvalues import chi2_sf_vec, ks_2samp_pvalue_vec
-
-    @pandas_udf("double")
-    def _ks_p(d: pd.Series, n1: pd.Series, n2: pd.Series) -> pd.Series:
-        return pd.Series(
-            ks_2samp_pvalue_vec(
-                d.to_numpy(float), n1.to_numpy(float), n2.to_numpy(float)
-            )
-        )
-
-    @pandas_udf("double")
-    def _chi2_p(stat: pd.Series, dof: pd.Series) -> pd.Series:
-        return pd.Series(
-            chi2_sf_vec(stat.to_numpy(float), dof.to_numpy(float))
-        )
-
-    t = config.thresholds
-    return (
-        drift.withColumn(
-            "ks_pvalue", _ks_p(F.col("ks_stat"), F.col("n_cur"), F.col("n_ref"))
-        )
-        .withColumn(
-            "chi2_pvalue",
-            _chi2_p(F.col("chi2_stat"), F.col("chi2_dof").cast("double")),
-        )
-        .withColumn("ks_significant", F.col("ks_pvalue") < t.ks_alpha)
-        .withColumn("chi2_significant", F.col("chi2_pvalue") < t.chi2_alpha)
-        .withColumn(
-            "drift_detected",
-            (F.col("psi") >= t.psi_moderate)
-            | F.col("ks_significant")
-            | F.col("chi2_significant"),
-        )
-    )
+    """Alias of :func:`drift_stats`, kept only because the benchmark's traced
+    replay (``perfbench/workloads.py``) imports and calls it by this name."""
+    return drift_stats(cur_hist, ref_hist, partition_col, config, numeric_cols)
 
 
 def token_unigram_histogram(
@@ -427,9 +241,10 @@ def token_drift(
     """Unigram-distribution drift between two token-sequence tables.
 
     Drift on the token ids themselves (vocabulary usage) rather than the
-    sequence-length proxy ``n_tok``: PSI / JS / chi-square via
-    :func:`drift_stats` over the two vocab-bounded unigram histograms,
-    plus out-of-vocabulary evidence — ``new_tokens`` (ids occurring in
+    sequence-length proxy ``n_tok``: PSI / JS / chi-square from the same
+    driver-side kernel as :func:`drift_stats` over the two collected,
+    vocab-bounded unigram histograms, plus out-of-vocabulary evidence
+    from those same histograms — ``new_tokens`` (ids occurring in
     ``cur`` but never seen in ``ref``) and ``oov_pct`` (share of current
     token OCCURRENCES on those unseen ids). ``ks_stat`` is dropped:
     hashed token ids carry no meaningful order, so an ECDF gap over them
@@ -440,33 +255,21 @@ def token_drift(
     column-level drift to the token payload itself (BASELINE.json
     north-star: drift checks over pre-tokenized training sequences).
     """
-    cur_h = token_unigram_histogram(cur, tokens_col).cache()
-    ref_h = token_unigram_histogram(ref, tokens_col)
-    stats = drift_stats(cur_h, ref_h, partition_col=None, config=config)
-    # OOV from the same cached cur histogram; ref side is vocab-bounded
-    # and broadcast, so this adds no second scan of either corpus
-    oov = (
-        cur_h.join(
-            F.broadcast(ref_h.select("bin", F.lit(1).alias("_seen"))),
-            on="bin",
-            how="left",
-        )
-        .groupBy("col")
-        .agg(
-            F.sum(F.when(F.col("_seen").isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("new_tokens"),
-            (
-                F.lit(100.0)
-                * F.sum(
-                    F.when(F.col("_seen").isNull(), F.col("cnt")).otherwise(
-                        F.lit(0)
-                    )
-                )
-                / F.sum("cnt")
-            ).alias("oov_pct"),
-        )
+    cur_h = _collect_counts(token_unigram_histogram(cur, tokens_col), ["col"])
+    ref_h = _collect_counts(token_unigram_histogram(ref, tokens_col), ["col"])
+    rows = []
+    for (col,), counts in cur_h.items():
+        seen = ref_h.get((col,), {})
+        unseen = [n for b, n in counts.items() if b not in seen]
+        rows.append({
+            "col": col,
+            **_drift_from_counts(counts, seen, False, config),
+            "new_tokens": len(unseen),
+            "oov_pct": 100.0 * sum(unseen) / sum(counts.values()),
+        })
+    schema = StructType.fromDDL(
+        "col string, n_cur long, n_ref long, psi double, "
+        "js_divergence double, chi2_stat double, chi2_dof long, "
+        "psi_drift string, new_tokens long, oov_pct double"
     )
-    out = stats.drop("ks_stat").join(oov, on="col", how="left")
-    out._cached_intermediates = [cur_h, *getattr(stats, "_cached_intermediates", [])]
-    return out
+    return _local_frame(cur.sparkSession, rows, schema)

@@ -89,16 +89,14 @@ def value_histogram(
 ) -> DataFrame:
     """Exact per-value histogram for bounded int columns (n_tok ∈ [1, 2048]):
     per-value bins make the downstream KS statistic EXACT, not approximate
-    (SURVEY.md §7.4.4). Bin = zero-padded value string."""
+    (SURVEY.md §7.4.4). Bin = zero-padded value string; values outside
+    [0, 999999] land in the edge bins (as in ``numeric_histogram``) — lpad
+    would otherwise emit "0000-1" for -1 and truncate 1234567 to "123456"."""
     keys = [partition_col] if partition_col else []
+    v = F.least(F.greatest(F.col(column).cast("long"), F.lit(0)), F.lit(999999))
     return (
         df.filter(F.col(column).isNotNull())
-        .select(
-            *keys,
-            F.lpad(F.col(column).cast("long").cast("string"), 6, "0").alias(
-                "bin"
-            ),
-        )
+        .select(*keys, F.lpad(v.cast("string"), 6, "0").alias("bin"))
         .groupBy(*keys, "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("col", F.lit(column))

@@ -33,7 +33,7 @@ from ..functions.scoring import overall_score
 from ..functions.verdicts import grade
 from pyspark import StorageLevel
 
-from ..operators.drift import drift_stats_broadcast
+from ..operators.drift import drift_stats
 from ..operators.histogram import categorical_counts, value_histogram
 from ..operators.invariants import (
     token_digests,
@@ -119,9 +119,8 @@ def build_verdicts(
     ref_sequences: DataFrame | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
     ref_digests: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Assemble all per-partition verdict rows (no writes, lazy).
+    """Assemble all per-partition verdict rows (no writes).
 
     ``ref_digests`` (doc_id, tok_digest) is the preferred reference-side
     artifact for the per-row token-equality invariant; ``ref_sequences``
@@ -139,16 +138,10 @@ def build_verdicts(
     # union is one job whose first-level stages would otherwise start
     # concurrently and each recompute the heavy token-array scan while the
     # cache is still cold (a cache-fill race duplicating the dominant cost).
-    # materialize=False defers this to the caller (benchmark probes that
-    # time plan construction and execution separately must re-persist and
-    # count these intermediates — in _cached order — inside the timed
-    # region after any clearCache).
-    if materialize:
-        prepared.count()
+    prepared.count()
     seq = sequence_stats_prepared(prepared, config.partition_col).cache()
     _cached.append(seq)
-    if materialize:
-        seq.count()
+    seq.count()
 
     pieces: list[DataFrame] = []
 
@@ -263,13 +256,13 @@ def build_verdicts(
         )
 
     # 5. drift vs reference snapshot (PSI/KS/JS/chi² from histograms):
-    #    per-partition histograms from the cached projection, then ONE
-    #    applyInPandas stage against the broadcast reference histograms
+    #    per-partition histograms from the cached projection, collected
+    #    with the reference histograms and finished on the driver
     if ref_stats is not None:
         fine = value_histogram(prepared, "n_tok").unionByName(src_counts)
-        drift = drift_stats_broadcast(
-            fine, ref_stats, numeric_cols={"n_tok"},
-            partition_col=config.partition_col, config=config,
+        drift = drift_stats(
+            fine, ref_stats, config.partition_col, config,
+            numeric_cols={"n_tok"},
         )
         pieces.append(
             drift.select(

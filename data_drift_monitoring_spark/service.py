@@ -348,11 +348,7 @@ class ValidationService:
                 out = out.unionByName(p)
             return out
 
-        from .plans.pipeline import release_cached
-
-        stats = drift_stats(hists(df), hists(base), partition_col=None)
-        rows = stats.collect()
-        release_cached(stats)  # keep repeated service calls cache-bounded
+        rows = drift_stats(hists(df), hists(base), partition_col=None).collect()
         cols = {}
         n_drifted = 0
         for r in rows:

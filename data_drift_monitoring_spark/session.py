@@ -22,19 +22,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; under
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one task slot
+    per core this process may run on when that is unset; under
     ``spark-submit`` (detected via the gateway the launcher JVM exports) it is
     left unset so ``--master``/``--deploy-mode`` on the submit command line
     control deployment instead of being silently overridden here.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(cores)
     under_spark_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # one shuffle partition per core locally; a real cluster would size
         # this to 2-3x total executor cores or rely on AQE coalescing.
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else cores
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

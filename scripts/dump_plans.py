@@ -22,11 +22,12 @@ plans may further coalesce partitions at runtime). What to look for:
   only partial-aggregate state (two-phase HashAggregate); the digest join
   is a ShuffledHashJoin (no sorts) whose output partitioning feeds the
   downstream aggregation without a second row exchange.
-- **Broadcast where small**: the allowed-source dim and reference
-  histograms never shuffle the fact side.
-- **WholeStageCodegen** spans cover the hot path; Python appears only in
-  the single `applyInPandas` drift stage (FlatMapGroupsInPandas/
-  ArrowEvalPython nodes).
+- **Broadcast where small**: the allowed-source dim never shuffles the
+  fact side; drift histograms are collected to the driver, and the
+  statistics return as a LocalTableScan.
+- **WholeStageCodegen** spans cover the hot path; the flagship pipeline
+  runs no Python worker (Python appears only in standalone operators
+  such as the repetition signals' ArrowEvalPython).
 """
 
 
@@ -44,9 +45,7 @@ def main() -> None:
 
     from data_drift_monitoring_spark.config import ALLOWED_SOURCES
     from data_drift_monitoring_spark.generator import generate_sequences
-    from data_drift_monitoring_spark.operators.drift import (
-        drift_stats_broadcast,
-    )
+    from data_drift_monitoring_spark.operators.drift import drift_stats
     from data_drift_monitoring_spark.operators.histogram import (
         categorical_counts,
         value_histogram,
@@ -100,11 +99,11 @@ def main() -> None:
             uniqueness_and_token_equality(p, rd),
         ),
         (
-            "drift — histograms + one applyInPandas stage",
+            "drift — histograms collected, statistics on the driver",
             "Histogram aggregation shuffles O(partitions × bins) rows; "
-            "reference histograms are a broadcast python dict; all "
-            "statistics and p-values in one FlatMapGroupsInPandas.",
-            drift_stats_broadcast(
+            "drift_stats collects both histograms, computes statistics "
+            "and p-values in numpy and returns a LocalTableScan.",
+            drift_stats(
                 value_histogram(p, "n_tok").unionByName(
                     categorical_counts(p, "source")
                 ),

@@ -12,11 +12,7 @@ from data_drift_monitoring_spark.functions.pvalues import (
     kolmogorov_sf,
     ks_2samp_pvalue,
 )
-from data_drift_monitoring_spark.operators.drift import (
-    drift_stats,
-    numeric_drift,
-    with_drift_pvalues,
-)
+from data_drift_monitoring_spark.operators.drift import drift_stats
 from data_drift_monitoring_spark.operators.histogram import (
     categorical_counts,
     value_histogram,
@@ -87,9 +83,13 @@ def test_pvalues_against_tables():
 def test_drifted_fixture_detection(spark, ref_df, cur_drifted_df):
     ref_ntok = value_histogram(ref_df, "n_tok", partition_col=None)
     ref_src = categorical_counts(ref_df, "source", partition_col=None)
-    nd = numeric_drift(value_histogram(cur_drifted_df, "n_tok"), ref_ntok, "n_tok")
-    cd = drift_stats(categorical_counts(cur_drifted_df, "source"), ref_src)
-    out = with_drift_pvalues(nd.unionByName(cd.select(nd.columns)))
+    out = drift_stats(
+        value_histogram(cur_drifted_df, "n_tok").unionByName(
+            categorical_counts(cur_drifted_df, "source")
+        ),
+        ref_ntok.unionByName(ref_src),
+        numeric_cols={"n_tok"},
+    )
     rows = {(r["part_id"], r["col"]): r for r in out.collect()}
     # FIXTURES.md: p6/p7 shifted n_tok → PSI > 0.25 and significant KS
     for p in (6, 7):
@@ -112,8 +112,8 @@ def test_drifted_fixture_detection(spark, ref_df, cur_drifted_df):
 
 def test_clean_fixture_no_drift(spark, ref_df, cur_clean_df):
     ref_ntok = value_histogram(ref_df, "n_tok", partition_col=None)
-    nd = with_drift_pvalues(
-        numeric_drift(value_histogram(cur_clean_df, "n_tok"), ref_ntok, "n_tok")
+    nd = drift_stats(
+        value_histogram(cur_clean_df, "n_tok"), ref_ntok, numeric_cols={"n_tok"}
     )
     for r in nd.collect():
         assert r["psi"] < 0.1
@@ -133,9 +133,14 @@ def test_salted_categorical_counts_match_plain(spark, cur_drifted_df):
 
 
 def test_broadcast_drift_matches_composition(spark, ref_df, cur_drifted_df):
-    """drift_stats_broadcast (one applyInPandas stage) must reproduce the
+    """The production kernel (drift_stats, driver-side numpy) must reproduce
+    the independent Spark column-algebra oracle's
     drift_stats→rebin→numeric_drift→with_drift_pvalues composition exactly:
-    same universe/clamp/dof conventions, same p-values."""
+    same universe/clamp/dof conventions, same p-values. The
+    drift_stats_broadcast alias must return the same rows."""
+    from _drift_oracle import drift_stats as oracle_drift_stats
+    from _drift_oracle import numeric_drift, with_drift_pvalues
+
     from data_drift_monitoring_spark.operators.drift import drift_stats_broadcast
     from data_drift_monitoring_spark.plans.reference import build_ref_stats
 
@@ -144,7 +149,7 @@ def test_broadcast_drift_matches_composition(spark, ref_df, cur_drifted_df):
     ch = categorical_counts(cur_drifted_df, "source")
 
     nd = numeric_drift(nh, ref_stats.filter(F.col("col") == "n_tok"), "n_tok")
-    cd = drift_stats(ch, ref_stats.filter(F.col("col") == "source"))
+    cd = oracle_drift_stats(ch, ref_stats.filter(F.col("col") == "source"))
     composed = {
         (r["part_id"], r["col"]): r
         for r in with_drift_pvalues(nd.unionByName(cd.select(nd.columns)))
@@ -153,10 +158,14 @@ def test_broadcast_drift_matches_composition(spark, ref_df, cur_drifted_df):
 
     grouped = {
         (r["part_id"], r["col"]): r
-        for r in drift_stats_broadcast(
+        for r in drift_stats(
             nh.unionByName(ch), ref_stats, numeric_cols={"n_tok"}
         ).collect()
     }
+    alias = drift_stats_broadcast(
+        nh.unionByName(ch), ref_stats, numeric_cols={"n_tok"}
+    ).collect()
+    assert sorted(alias) == sorted(grouped.values())
 
     assert set(grouped) == set(composed)
     for k, g in grouped.items():
@@ -298,3 +307,26 @@ def test_token_unigram_bins_distinct_at_large_ids(spark):
     )
     bins = {r["bin"] for r in token_unigram_histogram(df).collect()}
     assert bins == {"0214748364", "2147483646", "0021474836"}
+
+
+def test_value_histogram_clamps_out_of_range_values(spark, ref_df):
+    """n_tok outside [0, 999999] lands in the edge bins: lpad alone made
+    -1 into bin "0000-1" (the drift kernel then failed to parse it) and
+    truncated 1234567 into bin "123456"."""
+    from data_drift_monitoring_spark.plans.pipeline import build_verdicts
+    from data_drift_monitoring_spark.plans.reference import build_ref_stats
+
+    ref_stats = build_ref_stats(ref_df).cache()
+    cur = ref_df.filter(F.col("part_id") == 0).limit(50).withColumn(
+        "n_tok",
+        F.when(F.xxhash64("doc_id") % 2 == 0, F.lit(-1)).otherwise(
+            F.lit(1234567)
+        ),
+    )
+    bins = {r["bin"] for r in value_histogram(cur, "n_tok").collect()}
+    assert bins == {"000000", "999999"}
+
+    v = build_verdicts(cur, ref_stats).filter(F.col("check") == "drift_psi")
+    drift = {r["column"]: r for r in v.collect()}
+    assert drift["n_tok"]["severity"] == "large"
+    assert not drift["n_tok"]["passed"]

@@ -1,7 +1,9 @@
-"""Property-based cross-check of the TWO independent drift implementations:
+"""Property-based cross-check of the production drift kernel against an
+independent oracle:
 
-- ``drift.drift_stats``: Spark column algebra (windows + joins + aggs)
-- ``drift._drift_from_counts``: numpy (used inside drift_stats_broadcast)
+- ``drift.drift_stats``: the production path (histograms collected, the
+  numpy kernel ``drift._drift_from_counts`` on the driver)
+- ``_drift_oracle.drift_stats``: Spark column algebra (windows + joins + aggs)
 
 Same universe/clamp/dof conventions by spec — hypothesis hunts the corners
 (empty bins, singleton histograms, all-mass-in-one-bin, cur-only /
@@ -15,10 +17,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from data_drift_monitoring_spark.operators.drift import (
-    _drift_from_counts,
-    drift_stats,
-)
+from _drift_oracle import drift_stats as oracle_drift_stats
+
+from data_drift_monitoring_spark.operators.drift import drift_stats
 
 # bin label universe: zero-padded ints so lexical sort == numeric sort,
 # matching the engine's histogram bin convention
@@ -45,19 +46,19 @@ def test_sql_and_numpy_drift_agree(spark, cur_counts, ref_counts):
     cur, ref = _hist(cur_counts), _hist(ref_counts)
     if sum(cur.values()) == 0 or sum(ref.values()) == 0:
         return  # degenerate: no distribution to compare
-    np_out = _drift_from_counts(cur, ref, numeric=False, bins=32)
-
     cur_df = spark.createDataFrame(
         [("c", b, c) for b, c in cur.items()], "col string, bin string, cnt long"
     )
     ref_df = spark.createDataFrame(
         [("c", b, c) for b, c in ref.items()], "col string, bin string, cnt long"
     )
-    row = drift_stats(cur_df, ref_df, partition_col=None).collect()[0]
+    np_out = drift_stats(cur_df, ref_df, partition_col=None).collect()[0]
+    row = oracle_drift_stats(cur_df, ref_df, partition_col=None).collect()[0]
 
     assert row["n_cur"] == np_out["n_cur"]
     assert row["n_ref"] == np_out["n_ref"]
     assert row["chi2_dof"] == np_out["chi2_dof"]
+    assert row["psi_drift"] == np_out["psi_drift"]
     for f in ("psi", "js_divergence", "ks_stat", "chi2_stat"):
         a, b = float(row[f]), float(np_out[f])
         assert math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12), (f, a, b)

@@ -64,8 +64,10 @@ def test_outlier_recommendation(spark, pct, skew, expected):
 @pytest.mark.parametrize(
     "psi,expected", [(0.05, "none"), (0.15, "moderate"), (0.30, "large")]
 )
-def test_psi_classification(spark, psi, expected):
-    assert _eval(spark, V.psi_classification(F.lit(psi))) == expected
+def test_psi_classification(psi, expected):
+    from data_drift_monitoring_spark.operators.drift import psi_severity
+
+    assert psi_severity(psi) == expected
 
 
 @pytest.mark.parametrize(
