@@ -44,6 +44,13 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "1000000"))
 BENCH_PARTS = 32  # one parquet file per logical part_id → 32 input splits
 CACHE = os.path.join(REPO, ".bench_cache")
+# 40M-row runs hold the cached projection + concurrent shuffled-hash
+# builds, so the 8g library default is too tight; half of physical memory
+# (capped at 24g) leaves the host room for the Python workers and page
+# cache. SPARK_DRIVER_MEMORY overrides.
+DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY") or "%dg" % max(
+    1, min(24, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31)
+)
 
 HEADLINE = [
     "q_seq_stats",
@@ -155,11 +162,7 @@ def _spark(cpus: int):
                 # and would corrupt the one-JSON-line bench contract
                 "-Xlog:disable"
             ),
-            # 40M-row runs hold the cached projection + concurrent
-            # shuffled-hash builds; the 8g library default is too tight
-            "spark.driver.memory": os.environ.get(
-                "SPARK_DRIVER_MEMORY", "24g"
-            ),
+            "spark.driver.memory": DRIVER_MEMORY,
         },
     )
 
@@ -575,7 +578,7 @@ scaling rather than the sandbox's bus.
 
 Session config common to both: AQE on (coalescePartitions + skewJoin),
 Arrow enabled, broadcast threshold 64 MB, shuffled-hash joins preferred,
-UTC, `spark.driver.memory=24g`, maxPartitionBytes=32MB (scan splits >=
+UTC, `spark.driver.memory={DRIVER_MEMORY}`, maxPartitionBytes=32MB (scan splits >=
 core count), shuffle.partitions=min(max(4*cores,32), rows/300k)
 (per-task shuffled-hash
 build state is bounded by data volume x concurrency, not core count),

@@ -1,6 +1,7 @@
 """Arrow-side tokenization mirror of the JVM expression convention.
 
-The expression twins (and every DuckDB oracle) tokenize as
+The JVM expression paths (``dedup._with_shingles`` for exact n-gram
+Jaccard, ``text_analysis``) and every DuckDB oracle tokenize as
 ``split(regexp_replace(lower([trim](text)), '\\s+', ' '), ' ')`` where
 
 * ``trim()`` strips ONLY space characters (0x20), never tabs/newlines;
@@ -11,9 +12,10 @@ pandas' defaults diverge on both counts: ``.str.strip()`` strips ALL
 whitespace and Python ``\\s`` is Unicode-aware, so a text ending in
 ``'\\n'`` tokenized with the pandas defaults yields one fewer word than
 the expression/oracle convention (``'hello\\n'`` → 1 word vs 2). Every
-Arrow tokenizer in this package must therefore go through
-:func:`expr_words`, which strips spaces only and collapses exactly the
-ASCII class.
+Arrow tokenizer in this package (the MinHash signature table, the
+contamination grams, the repetition counts) must therefore go through
+:func:`expr_words` / :func:`expr_word_hashes_arrow`, which strip spaces
+only and collapse exactly the ASCII class.
 """
 
 from __future__ import annotations
@@ -43,10 +45,11 @@ def expr_word_hashes(texts: "pd.Series", trim: bool = False):
     """Per-word 64-bit hashes of ``expr_words(texts, trim)`` WITHOUT
     materializing every word instance as a Python object.
 
-    pandas-UDF entry point: converts the object Series back to arrow
-    once and delegates to :func:`expr_word_hashes_arrow` (the zero-copy
-    ``mapInArrow`` paths skip this conversion — and, upstream, skip
-    Spark's arrow→pandas object materialization of every text)."""
+    pandas-UDF entry point (the repetition counts UDF): converts the
+    object Series back to arrow once and delegates to
+    :func:`expr_word_hashes_arrow` (the zero-copy ``mapInArrow`` paths
+    skip this conversion — and, upstream, skip Spark's arrow→pandas
+    object materialization of every text)."""
     import numpy as np
     import pyarrow as pa
 

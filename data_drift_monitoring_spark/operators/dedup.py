@@ -6,10 +6,11 @@ n-gram Jaccard verification, and embedding-cosine near-dup.
 Scale design:
 - exact: hash-groupBy on a content digest (never on raw text) — the shuffle
   moves 16-byte digests, not documents.
-- MinHash+LSH: shingle → 64 minhashes (JVM expression: array_min over a
-  universal-hash transform of xxhash64 shingle hashes) → B bands hashed to
-  buckets → candidate pairs ONLY within buckets (self-join on (band, hash),
-  quadratic only in bucket size) → exact/estimated Jaccard verification.
+- MinHash+LSH: shingle → 64 minhashes (one mapInArrow pass: numpy
+  segment-min of a universal-hash transform of the shingle hashes) → B
+  bands hashed to buckets → candidate pairs ONLY within buckets
+  (self-join on (band, hash), quadratic only in bucket size) →
+  exact/estimated Jaccard verification.
 - SimHash: 64-bit signature via an Arrow pandas UDF (numpy bitcount); near
   dups = identical signatures (or Hamming ≤ d by multi-table split).
 - embedding cosine: random-hyperplane LSH bucket join + exact cosine within
@@ -24,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
-from ._tokenize import expr_word_hashes, expr_word_hashes_arrow
+from ._tokenize import expr_word_hashes_arrow
 from .similarity import vec_matrix
 
 # Mersenne prime 2^31-1: universal hashing a*x+b mod p. The 31-bit field
@@ -98,56 +99,6 @@ def _with_shingles(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-    seed: int = 42,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Add ``minhash`` (array<bigint>, length num_hashes): per hash i,
-    min over shingles of (aᵢ·h + bᵢ mod 2³¹-1). Deterministic in seed.
-
-    ``impl='arrow'`` (default): one vectorized pandas-UDF pass — tokenize
-    and dictionary-encode in pyarrow C, hash only the vocabulary
-    (pandas.util.hash_array, cython siphash, deterministic — see
-    _tokenize.expr_word_hashes), combine word hashes into shingle hashes
-    with flat uint64 slicing (no per-doc loop), then ONE
-    ``np.minimum.reduceat`` segment-min per hash chunk. Measured ~20× the
-    expression variant: Catalyst higher-order-function lambdas
-    (transform/array_min) are evaluated INTERPRETED, ~3 µs per shingle —
-    the expr path costs O(docs · shingles · num_hashes) interpreted evals
-    and dominates the whole LSH pipeline at corpus scale.
-    ``impl='expr'``: the pure-JVM expression variant (no Python workers) —
-    kept for environments where Arrow is unavailable.
-
-    The two impls produce different (both valid) hash families; recall
-    guarantees and the est-Jaccard estimator are identical in
-    distribution, and the verified-pair output is identical wherever the
-    band recall bound holds (oracle-checked in the gate)."""
-    if impl == "expr":
-        return _minhash_signatures_expr(
-            df, text_col, num_hashes, shingle_k, seed
-        )
-    rng = np.random.default_rng(seed)
-    ua = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(
-        np.uint64
-    )
-    ub = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(
-        np.uint64
-    )
-    mix = _mix_constants(shingle_k)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _mh(texts: pd.Series) -> pd.Series:
-        sh, sdoc = _doc_shingle_hashes(texts, shingle_k, mix)
-        out = _minhash_matrix(sh, sdoc, len(texts), ua, ub, num_hashes)
-        return pd.Series(list(out))
-
-    return df.withColumn("minhash", _mh(F.col(text_col)))
-
-
 def _minhash_matrix(
     sh: "np.ndarray",
     sdoc: "np.ndarray",
@@ -183,20 +134,21 @@ def minhash_signature_table(
     shingle_k: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """(key_col, minhash) — the signature table every LSH stage actually
-    consumes — via ``mapInArrow`` instead of a pandas UDF.
+    """(key_col, minhash): per hash i, min over the k-word shingle hashes
+    of (aᵢ·h + bᵢ mod 2³¹-1). Deterministic in seed. The one signature
+    producer every LSH stage consumes.
 
-    Why this beats :func:`minhash_signatures`'s pandas-UDF path on a
-    memory-bandwidth-bound host: the pandas UDF makes Spark materialize
-    every text as a Python str object (one allocation + copy per doc on
-    the arrow→pandas edge) and rebuilds the result list array from a
-    Series of per-row ndarrays; here the text column is consumed
-    ZERO-COPY off the Arrow IPC batch (``expr_word_hashes_arrow``), the
-    key column is forwarded untouched, and the signature list array is
-    assembled from one flat int64 buffer. Signatures are bit-identical
-    to ``minhash_signatures(df, ...)`` for the same seed
-    (tested: test_dedup_similarity_text). Text is deliberately NOT in
-    the output schema, so it is never re-serialized to the JVM."""
+    One ``mapInArrow`` pass: the text column is consumed ZERO-COPY off
+    the Arrow IPC batch and tokenized/dictionary-encoded in pyarrow C,
+    only the vocabulary is hashed (``_tokenize.expr_word_hashes_arrow``),
+    word hashes combine into shingle hashes by flat uint64 slicing (no
+    per-doc loop), and ONE ``np.minimum.reduceat`` segment-min per hash
+    chunk builds the signatures, assembled into the list array from one
+    flat int64 buffer. The key column is forwarded untouched; text is
+    deliberately NOT in the output schema, so it is never re-serialized
+    to the JVM. Measured ~20× a Catalyst higher-order-function variant
+    (transform/array_min lambdas are evaluated interpreted, ~3 µs per
+    shingle)."""
     import pyarrow as pa
 
     rng = np.random.default_rng(seed)
@@ -252,38 +204,17 @@ def _mix_constants(k: int) -> "np.ndarray":
     return mix
 
 
-def _doc_shingle_hashes(
-    texts: "pd.Series", k: int, mix: "np.ndarray"
-) -> tuple:
-    """Vectorized per-doc k-word shingle hashes for Arrow UDFs: word
-    hashes from the shared pyarrow dictionary-encode path (only the
-    vocabulary is materialized — _tokenize.expr_word_hashes), combined
-    into shingle hashes with flat uint64 slicing (no per-doc loop). Docs
-    shorter than k words get ONE shingle over all their words (mirror of
-    slice() clamping in the expression variants). Returns (sh uint64
-    shingle hashes, sdoc int64 doc index per shingle) sorted by doc."""
-    # expr-convention word hashes (ASCII \s class only, no trim —
-    # round-3 ADVICE parity) via the shared pyarrow dictionary-encode
-    # path: only the vocabulary is materialized as Python objects,
-    # hashes bit-identical to flattening every instance, measured 2.9×
-    # on 200k corpus docs / 16M words — the former flatten list-comp
-    # and per-instance object creation were the memory-traffic hot
-    # spot the pinned ladders exposed (see _tokenize.expr_word_hashes).
-    lens, hw = expr_word_hashes(texts, trim=False)
-    return _shingles_from_word_hashes(lens, hw, len(texts), k, mix)
-
-
 def _doc_shingle_hashes_arrow(arr, k: int, mix: "np.ndarray") -> tuple:
-    """`_doc_shingle_hashes` over a pyarrow string Array/ChunkedArray —
-    the zero-copy ``mapInArrow`` entry point (no pandas object Series
-    ever materialized for the text). Bit-identical output."""
+    """Per-doc k-word shingle hashes over a pyarrow string
+    Array/ChunkedArray (the zero-copy ``mapInArrow`` entry point): word
+    hashes from the shared pyarrow dictionary-encode path
+    (``_tokenize.expr_word_hashes_arrow``, ASCII ``\\s`` class only, no
+    trim), combined into shingle hashes with flat uint64 slicing. Docs
+    shorter than k words get ONE shingle over all their words (mirror of
+    ``slice()`` clamping in ``_with_shingles``). Returns (sh uint64
+    shingle hashes, sdoc int64 doc index per shingle) sorted by doc."""
     lens, hw = expr_word_hashes_arrow(arr, trim=False)
-    return _shingles_from_word_hashes(lens, hw, len(arr), k, mix)
-
-
-def _shingles_from_word_hashes(
-    lens: "np.ndarray", hw: "np.ndarray", n: int, k: int, mix: "np.ndarray"
-) -> tuple:
+    n = len(arr)
     doc = np.repeat(np.arange(n, dtype=np.int64), lens)
     with np.errstate(over="ignore"):
         if len(hw) >= k:
@@ -315,43 +246,11 @@ def _shingles_from_word_hashes(
     return sh, sdoc
 
 
-def _minhash_signatures_expr(
-    df: DataFrame,
-    text_col: str,
-    num_hashes: int,
-    shingle_k: int,
-    seed: int,
-) -> DataFrame:
-    """Pure-JVM expression variant of ``minhash_signatures`` (no Python
-    workers; interpreted HOF evaluation — see the arrow docstring)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    df = _with_shingles(df, text_col, shingle_k, "_sh")
-
-    def _uhash(ai: int, bi: int):
-        # one-arg closure: F.transform must NOT see a second (index) param.
-        # reduce the 64-bit shingle hash into the field before multiplying.
-        return lambda h: F.pmod(
-            F.lit(ai) * F.pmod(h, F.lit(_MERSENNE)) + F.lit(bi),
-            F.lit(_MERSENNE),
-        )
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("_sh"), _uhash(int(a[i]), int(b[i]))))
-            for i in range(num_hashes)
-        ]
-    )
-    return df.withColumn("minhash", sig).drop("_sh")
-
-
 def _salt_oversized(
     d: DataFrame,
     bucket_cols: list[str],
     order_col: str,
     max_bucket_size: int | None,
-    method: str = "census",
 ) -> DataFrame:
     """Append ``_salt``: rows of a bucket larger than ``max_bucket_size``
     are chunked into ~ceil(n/cap) sub-buckets; smaller buckets keep salt 0
@@ -364,24 +263,14 @@ def _salt_oversized(
     missed, but every member of such a bucket is still compared against
     its chunk co-members, which is what dedup connectivity needs.
 
-    ``method='census'`` (default): bucket-size census (map-side-combined
-    count whose output keeps ONLY oversized buckets — tiny) → broadcast
-    join → ``pmod(xxhash64(key), chunks)``. No extra shuffle of the banded
-    rows and no single-task stage: every row salts itself independently.
-    ``method='window'`` (the earlier design, kept as fallback) chunks
-    deterministically by ``row_number`` — but that adds a sort exchange of
-    the banded rows and funnels each oversized bucket through ONE window
-    task before the join is bounded, a latent single-task sort at 100×."""
+    Bucket-size census (map-side-combined count whose output keeps ONLY
+    oversized buckets — tiny) → broadcast join → ``pmod(xxhash64(key),
+    chunks)``. No extra shuffle of the banded rows and no single-task
+    stage: every row salts itself independently (a ``row_number`` window
+    would add a sort exchange and funnel each oversized bucket through one
+    task before the join is bounded)."""
     if max_bucket_size is None:
         return d.withColumn("_salt", F.lit(0))
-    if method == "window":
-        w = Window.partitionBy(*bucket_cols).orderBy(F.col(order_col).asc())
-        return d.withColumn(
-            "_salt",
-            F.floor(
-                (F.row_number().over(w) - 1) / F.lit(max_bucket_size)
-            ).cast("int"),
-        )
     census = (
         d.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("_bn"))
@@ -462,7 +351,7 @@ def lsh_candidate_pairs(
     When census salting is active (``max_bucket_size``), the banded frame
     is persisted (MEMORY_AND_DISK): the census aggregate and the two join
     sides otherwise each recompute the banding subplan INCLUDING the
-    signature UDF — plan-counted as 3 ArrowEvalPython evaluations of the
+    signature pass — plan-counted as 3 PythonMapInArrow evaluations of the
     most expensive stage. The banded rows are ~24 B × bands per doc
     (~0.3% of corpus bytes), so the cache is cheap relative to one
     recompute; eviction under pressure degrades to recompute, never to
@@ -470,7 +359,7 @@ def lsh_candidate_pairs(
     banded = _band_rows(sigs, key_col, num_hashes, bands)
     # unconditional: even without census salting both self-join sides
     # reference this frame, so uncached the banding subplan (including the
-    # signature UDF) runs twice; salting adds the census as a third reader
+    # signature pass) runs twice; salting adds the census as a third reader
     banded_cached = banded.persist()
     banded = banded_cached
     banded = _salt_oversized(banded, ["band", "bh"], "k", max_bucket_size)
@@ -1091,44 +980,29 @@ def embedding_near_duplicates_against(
     )
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    algorithm: str = "star",
-) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (key, cluster) where
     ``cluster`` is the minimum key in the component — the step between
     pair mining (MinHash/SimHash/embedding LSH) and corpus dedup (keep
     one representative per cluster).
 
-    ``algorithm='star'`` (default): alternating large-star / small-star
-    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — each round re-points edges at local minima, roughly
-    squaring the contraction, so deep components converge in O(log²)
-    rounds where one-hop label propagation needs O(diameter). Each
-    half-round is one aggregate + one join on the pair-derived edge set,
-    never on the corpus.
-    ``algorithm='label_prop'``: the one-hop min-label propagation
-    fallback (O(diameter) rounds).
-
-    Both raise RuntimeError if ``max_iters`` rounds pass without
+    Alternating large-star / small-star contraction (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond") until the edge
+    set is a forest of stars rooted at each component's minimum key. Each
+    round re-points edges at local minima, roughly squaring the
+    contraction, so deep components converge in O(log²) rounds where
+    one-hop label propagation needs O(diameter). Each half-round is one
+    aggregate + one join on the pair-derived edge set, never on the
+    corpus. Raises RuntimeError if ``max_iters`` rounds pass without
     convergence — returning silently would hand the caller *wrong*
-    cluster labels with no signal."""
-    e = pairs.select("a", "b").filter(F.col("a") != F.col("b"))
-    if algorithm == "star":
-        return _star_clusters(e, max_iters)
-    return _label_prop_clusters(e, max_iters)
-
-
-def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is a
-    forest of stars rooted at each component's minimum key.
+    cluster labels with no signal.
 
     Edges are kept oriented (a > b). localCheckpoint (not mere persist)
     per round: an iterative plan that nests join-on-join grows
     super-linearly in the optimizer and OOMs the driver after ~10 rounds;
     checkpointing truncates the lineage so each round's plan is
     constant-size."""
+    e = pairs.select("a", "b").filter(F.col("a") != F.col("b"))
     nodes = (
         e.select(F.col("a").alias("k"))
         .unionByName(e.select(F.col("b").alias("k")))
@@ -1197,7 +1071,7 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
             break
     if not converged:
         raise RuntimeError(
-            f"duplicate_clusters(star) did not converge in {max_iters} "
+            f"duplicate_clusters did not converge in {max_iters} "
             "rounds — raise max_iters"
         )
     # nodes + the final edge set back the result's plan (checkpointed,
@@ -1211,66 +1085,6 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
         ).select("k", F.coalesce(F.col("_c"), F.col("k")).alias("cluster")),
         nodes,
         edges,
-    )
-
-
-def _label_prop_clusters(e: DataFrame, max_iters: int) -> DataFrame:
-    """One-hop min-label propagation; O(component diameter) rounds."""
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        und.select(F.col("a").alias("k"))
-        .distinct()
-        .withColumn("label", F.col("k"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iters):
-        neigh = (
-            und.join(
-                labels.select(
-                    F.col("k").alias("b"), F.col("label").alias("_nl")
-                ),
-                on="b",
-            )
-            .groupBy(F.col("a").alias("k"))
-            .agg(F.min("_nl").alias("_minn"))
-        )
-        new_labels = (
-            labels.join(neigh, on="k", how="left")
-            .select(
-                "k",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_minn"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="k")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        _release_one(labels)  # stale round, nothing reads it again
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters(label_prop) did not converge in "
-            f"{max_iters} rounds (label propagation advances one hop per "
-            "round) — raise max_iters or use algorithm='star'"
-        )
-    return _track_cached(
-        labels.select(F.col("k"), F.col("label").alias("cluster")),
-        und,
-        labels,
     )
 
 

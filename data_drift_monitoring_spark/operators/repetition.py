@@ -12,20 +12,15 @@ boilerplate/spam and get filtered before training. Signals:
   dup_trigram_frac : 1 - distinct_trigrams / n_trigrams (0 if < 3 words)
   top_word_frac    : occurrences of the most frequent word / n_words
 
-Scale design (10^12 docs): every signal is a pure per-row expression —
-one corpus scan, ZERO shuffle, no per-doc groupBy. Distinct counts use
-``array_distinct`` (codegen'd builtin, linear); n-grams come from two
-O(n) ``slice`` calls zipped once (NOT per-index ``transform(sequence)``
-slicing, which is O(words²) — the same trap fixed in the contamination
-gram path). The per-doc mode (``top_word_frac``) is the one signal that
-needs per-doc state; it runs as a linear ``aggregate`` HOF over the
-sorted word array (max run length), avoiding an explode + per-doc-word
-groupBy that would shuffle the corpus's full word stream. The HOF is
-interpreted per element; if profiling ever shows it dominating, the
-vectorized Arrow shingle core (``dedup._doc_shingle_hashes``) computes
-the same segment-max with ``np.maximum.reduceat`` — the expression path
-is preferred while it stays off the critical path because it keeps the
-whole signal block inside WholeStageCodegen's one projection.
+Scale design (10^12 docs): every signal is per-row — one corpus scan,
+ZERO shuffle, no per-doc groupBy. One vectorized Arrow pass computes the
+per-doc integer COUNTS (word hashes, n-gram hashes by flat uint64
+slicing, distinct/top via one lexsort + run boundaries); the fractions
+are derived JVM-side with the same float ops as the DuckDB oracle.
+Measured (16 cores, best of 3) against an interpreted higher-order-
+function expression variant (array_distinct / zip_with / aggregate over
+the split word array): parity at 5k docs, 1.8x at 1M docs / 62M words
+(6.4 s vs 11.5 s), the gap widening with doc count.
 
 The reference ships no corpus filters (its quality checks are tabular:
 backend/app/services/quality_check.py:25-191); this module serves the
@@ -49,36 +44,6 @@ DEFAULT_THRESHOLDS = {
     "top_word_frac": 0.30,
 }
 
-_TOP_RUN_EXPR = """
-aggregate(
-  array_sort({words}),
-  struct(cast(null as string) as prev, 0 as run, 0 as best),
-  (a, w) -> struct(
-    w as prev,
-    if(a.prev <=> w, a.run + 1, 1) as run,
-    greatest(a.best, if(a.prev <=> w, a.run + 1, 1)) as best),
-  a -> a.best)
-"""
-
-
-def _ngram_distinct(words: str, n: int) -> "F.Column":
-    """size(array_distinct(adjacent n-grams)) — linear: n-1 slices zipped
-    pairwise, each O(words), never a per-index slice."""
-    sz = F.size(F.col(words))
-    gram = F.col(words)
-    for j in range(1, n):
-        nxt = F.slice(F.col(words), j + 1, F.greatest(sz - j, F.lit(0)))
-        base = F.slice(
-            gram if j > 1 else F.col(words),
-            1,
-            F.greatest(sz - j, F.lit(0)),
-        )
-        gram = F.zip_with(
-            base, nxt, lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return F.size(F.array_distinct(gram))
-
-
 def _counts_arrow_udf():
     """Vectorized per-doc repetition counts in ONE Arrow batch pass:
     (n_words, distinct words, distinct bigrams, distinct trigrams, top
@@ -86,11 +51,11 @@ def _counts_arrow_udf():
     (pandas.util.hash_array, deterministic siphash), n-gram hashes by
     flat uint64 slicing, per-doc distinct/top via one lexsort + run
     boundaries — no per-doc Python loop (the same vectorization strategy
-    as dedup._doc_shingle_hashes). Word identity is by 64-bit hash: a
-    collision inside one document would alter a count; at ≤10^4 words
-    per doc the per-doc probability is ~1e-12 and the expression path
-    (use_arrow=False) is the collision-free mirror, equality-tested on
-    fixtures and real corpora."""
+    as dedup._doc_shingle_hashes_arrow). Word identity is by 64-bit hash:
+    a collision inside one document would alter a count; at ≤10^4 words
+    per doc the per-doc probability is ~1e-12 (the collision-free
+    reference is the pure-Python mirror in tests/test_repetition.py,
+    equality-tested on fixtures and 2,000 random docs)."""
     from pyspark.sql.functions import pandas_udf
 
     M = np.array(
@@ -158,57 +123,14 @@ def _counts_arrow_udf():
     return _sig
 
 
-def with_repetition_signals(
-    df: DataFrame, text_col: str = "text", use_arrow: bool = True
-) -> DataFrame:
+def with_repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the five repetition signals as columns. One scan, no
-    shuffle. Default path computes the per-doc COUNTS in one vectorized
-    Arrow batch and derives the fractions JVM-side with the same float
-    ops as the oracle. Measured (16 cores, best of 3): parity at 5k
-    docs, 1.8x at 1M docs / 62M words (6.4 s vs 11.5 s) — the
-    interpreted zip_with/aggregate HOFs scale worse than the Arrow
-    batch, and the gap widens with doc count. ``use_arrow=False`` keeps
-    everything in builtin expressions — no word-hash step at all (word
-    array staged once as a real column so the five outputs share it
-    instead of re-splitting per column — same staging rationale as
-    text_analysis.with_quality_score)."""
-    if use_arrow:
-        staged = df.withColumn(
-            "__r_c", _counts_arrow_udf()(F.col(text_col))
-        )
-        c = F.col("__r_c")
-        nw = c.getItem(0)
-        n2 = F.greatest(nw - 1, F.lit(0))
-        n3 = F.greatest(nw - 2, F.lit(0))
-
-        def frac(distinct, total):
-            return F.when(
-                total > 0,
-                F.lit(1.0)
-                - distinct.cast("double") / total.cast("double"),
-            ).otherwise(F.lit(0.0))
-
-        return (
-            staged.withColumn("n_words", nw)
-            .withColumn("dup_word_frac", frac(c.getItem(1), nw))
-            .withColumn("dup_bigram_frac", frac(c.getItem(2), n2))
-            .withColumn("dup_trigram_frac", frac(c.getItem(3), n3))
-            .withColumn(
-                "top_word_frac",
-                F.when(
-                    nw > 0,
-                    c.getItem(4).cast("double") / nw.cast("double"),
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("__r_c")
-        )
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-        r"\s+",
-        " ",
-    )
-    staged = df.withColumn("__r_words", F.split(norm, " "))
-    nw = F.size("__r_words")
+    shuffle: the per-doc COUNTS come from one vectorized Arrow batch and
+    the fractions are derived JVM-side with the same float ops as the
+    oracle."""
+    staged = df.withColumn("__r_c", _counts_arrow_udf()(F.col(text_col)))
+    c = F.col("__r_c")
+    nw = c.getItem(0)
     n2 = F.greatest(nw - 1, F.lit(0))
     n3 = F.greatest(nw - 2, F.lit(0))
 
@@ -218,26 +140,18 @@ def with_repetition_signals(
             F.lit(1.0) - distinct.cast("double") / total.cast("double"),
         ).otherwise(F.lit(0.0))
 
-    top_run = F.expr(_TOP_RUN_EXPR.format(words="__r_words"))
     return (
         staged.withColumn("n_words", nw)
-        .withColumn(
-            "dup_word_frac",
-            frac(F.size(F.array_distinct("__r_words")), nw),
-        )
-        .withColumn(
-            "dup_bigram_frac", frac(_ngram_distinct("__r_words", 2), n2)
-        )
-        .withColumn(
-            "dup_trigram_frac", frac(_ngram_distinct("__r_words", 3), n3)
-        )
+        .withColumn("dup_word_frac", frac(c.getItem(1), nw))
+        .withColumn("dup_bigram_frac", frac(c.getItem(2), n2))
+        .withColumn("dup_trigram_frac", frac(c.getItem(3), n3))
         .withColumn(
             "top_word_frac",
             F.when(
-                nw > 0, top_run.cast("double") / nw.cast("double")
+                nw > 0, c.getItem(4).cast("double") / nw.cast("double")
             ).otherwise(F.lit(0.0)),
         )
-        .drop("__r_words")
+        .drop("__r_c")
     )
 
 
@@ -245,12 +159,11 @@ def repetition_flags(
     df: DataFrame,
     text_col: str = "text",
     thresholds: dict[str, float] | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Signals + a boolean per threshold + the overall keep verdict
     (Gopher filters drop a doc if ANY signal exceeds its threshold)."""
     th = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
-    out = with_repetition_signals(df, text_col, use_arrow)
+    out = with_repetition_signals(df, text_col)
     flags = []
     for sig, lim in sorted(th.items()):
         flag = f"flag_{sig}"
@@ -267,13 +180,12 @@ def repetition_summary(
     text_col: str = "text",
     group_col: str = "source",
     thresholds: dict[str, float] | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-group corpus health: doc counts, mean signals, flagged/kept
     counts. Map-side-combinable aggregation over the per-row signals —
     the one exchange carries |groups| rows."""
     th = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
-    flagged = repetition_flags(df, text_col, th, use_arrow)
+    flagged = repetition_flags(df, text_col, th)
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     for sig in sorted(th):
         aggs.append(F.round(F.avg(sig), 6).alias(f"mean_{sig}"))

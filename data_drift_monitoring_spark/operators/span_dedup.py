@@ -22,11 +22,11 @@ the ``tokens:array<int>`` column of the sequence table:
 
 Scale design (10^12 sequences):
 
-  * gram extraction is narrow (no shuffle) and Arrow-vectorized by
-    default: one ``mapInPandas`` pass emits the flat occurrence frame
-    ``(gram: 8 bytes, doc_id, pos)`` straight from numpy (4x the
-    interpreted ``transform``/``slice`` expression twin, which is kept
-    as ``use_arrow=False``); token payloads never leave the scan;
+  * gram extraction is narrow (no shuffle) and Arrow-vectorized: one
+    ``mapInPandas`` pass emits the flat occurrence frame ``(gram: 8
+    bytes, doc_id, pos)`` straight from numpy (4x an interpreted
+    ``transform``/``slice`` xxhash64 expression); token payloads never
+    leave the scan;
   * the duplicate census is one count-only ``groupBy(gram)`` — fully
     hash-aggregable, map-side partial combine, 16-byte exchange rows;
   * ``count >= 2`` grams join back to the occurrence stream on the
@@ -52,10 +52,12 @@ are tabular: backend/app/services/quality_check.py:25-191); this module
 is a training-pipeline extension over the graft's token payload, next
 to ``contamination.py`` (train/eval grams) and ``packing.py``.
 
-``portable=True`` swaps xxhash64 for the md5-hex gram key that DuckDB
-reproduces bit-exactly (same construction as
-``dedup.portable_word_hash``) so the driver oracle can recompute the
-whole operator in SQL.
+``portable`` alone picks the gram path: ``portable=True`` runs the
+md5-hex gram key expression that DuckDB reproduces bit-exactly (same
+construction as ``dedup.portable_word_hash``) so the driver oracle can
+recompute the whole operator in SQL; otherwise the Arrow combiner runs.
+Both paths give identical dedup output (different gram values; the
+Arrow combiner's collision odds are ~n^2/2^64).
 """
 
 from __future__ import annotations
@@ -65,23 +67,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _gram_expr(tokens: F.Column, k: int, portable: bool) -> F.Column:
-    """Array of per-position gram keys for one document (empty if
-    n_tok < k). O(n_tok * k) inside one codegen'd projection."""
+def _gram_expr(tokens: F.Column, k: int) -> F.Column:
+    """Array of per-position portable md5-hex gram keys for one document
+    (empty if n_tok < k). O(n_tok * k) inside one projection."""
     n = F.size(tokens)
     starts = F.sequence(F.lit(0), n - k)  # 0-based start positions
-    if portable:
-        gram = lambda i: F.md5(  # noqa: E731
+
+    def gram(i):
+        return F.md5(
             F.array_join(
                 F.transform(F.slice(tokens, i + 1, k), lambda t: t.cast("string")),
                 ",",
             )
         )
-    else:
-        gram = lambda i: F.xxhash64(F.slice(tokens, i + 1, k))  # noqa: E731
+
     # sequence(0, n-k) DESCENDS when n < k (negative stop) — guard to empty
     return F.when(n >= k, F.transform(starts, gram)).otherwise(
-        F.array().cast("array<string>" if portable else "array<bigint>")
+        F.array().cast("array<string>")
     )
 
 
@@ -99,9 +101,9 @@ def _occ_arrow(df: DataFrame, k: int, tokens_col: str, id_col: str) -> DataFrame
     """Arrow gram path: one mapInPandas pass emits the flat occurrence
     frame (id, pos, gram) straight from numpy — no per-element
     interpreted lambda, no JVM explode. Measured 33 s -> 8 s (4x) for
-    33.6M grams at 16 cores vs the expression path (whose transform/
-    slice lambdas are interpreted per element — the same trap the
-    contamination gram path hit). Gram = XOR_j mix[j]*splitmix64(tok_j):
+    33.6M grams at 16 cores vs an xxhash64 expression path (whose
+    transform/slice lambdas are interpreted per element — the same trap
+    the contamination gram path hit). Gram = XOR_j mix[j]*splitmix64(tok_j):
     position-mixed 64-bit combiner over scrambled ids, collision odds
     ~n^2/2^64."""
     id_dt = df.schema[id_col].dataType.simpleString()
@@ -153,22 +155,15 @@ def ngram_occurrences(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
-    """One row per k-gram occurrence: (id_col, pos, gram). Narrow —
-    no shuffle; rows are (key, int, 8-byte hash). Default hash is the
-    vectorized Arrow combiner (``use_arrow=None`` -> True unless
-    ``portable``); ``use_arrow=False`` keeps the pure-expression
-    xxhash64 twin (same dedup semantics, different hash values)."""
-    if use_arrow is None:
-        use_arrow = not portable
-    if use_arrow and portable:
-        raise ValueError("portable grams are expression-only (md5)")
-    if use_arrow:
+    """One row per k-gram occurrence: (id_col, pos, gram). Narrow — no
+    shuffle. ``gram`` is the vectorized Arrow combiner's 8-byte hash, or
+    the md5-hex string with ``portable=True``."""
+    if not portable:
         return _occ_arrow(df, k, tokens_col, id_col)
     return df.select(
         F.col(id_col),
-        F.posexplode(_gram_expr(F.col(tokens_col), k, portable)).alias("pos", "gram"),
+        F.posexplode(_gram_expr(F.col(tokens_col), k)).alias("pos", "gram"),
     )
 
 
@@ -178,14 +173,13 @@ def duplicated_span_occurrences(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Every occurrence of a gram seen >= 2 times corpus-wide, flagged
     canonical (global min (id, pos) — the one occurrence kept) or not.
 
     Columns: id_col, pos, gram, gram_count, is_canonical.
     """
-    occ = ngram_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
+    occ = ngram_occurrences(df, k, tokens_col, id_col, portable)
     # Census carries ONLY (gram, count) — count is hash-aggregable, so the
     # big exchange is a HashAggregate of 16-byte rows with no sort. The
     # earlier min(struct(id, pos)) canonical forced a SortAggregate over
@@ -209,29 +203,28 @@ def duplicated_span_occurrences(
     )
 
 
-def _removed_starts(
-    df: DataFrame, k: int, tokens_col: str, id_col: str, portable: bool,
-    use_arrow: bool | None,
-) -> DataFrame:
-    """Per-doc sorted start positions of non-canonical duplicated grams."""
-    return (
-        duplicated_span_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
-        .filter(~F.col("is_canonical"))
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
-            F.count(F.lit(1)).alias("removed_occurrences"),
-        )
+def _starts_per_doc(occ: DataFrame, id_col: str) -> DataFrame:
+    """Per-doc sorted start positions (and count) of removed grams."""
+    return occ.groupBy(id_col).agg(
+        F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
+        F.count(F.lit(1)).alias("removed_occurrences"),
     )
 
 
 def _with_coverage(
-    df: DataFrame, k: int, tokens_col: str, id_col: str, portable: bool,
-    use_arrow: bool | None,
+    df: DataFrame, k: int, tokens_col: str, id_col: str, portable: bool
 ) -> DataFrame:
     """df + _dup_starts / removed_occurrences / _cov (sorted covered
-    token indices); docs with no duplication get empties, not nulls."""
-    removed = _removed_starts(df, k, tokens_col, id_col, portable, use_arrow)
+    token indices) for the non-canonical duplicated grams."""
+    dup = duplicated_span_occurrences(df, k, tokens_col, id_col, portable)
+    return _join_coverage(
+        df, _starts_per_doc(dup.filter(~F.col("is_canonical")), id_col), k, id_col
+    )
+
+
+def _join_coverage(df: DataFrame, removed: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Left-join the per-doc removed starts and expand them to ``_cov``;
+    docs with no duplication get empties, not nulls."""
     out = df.join(removed, id_col, "left")
     starts = F.coalesce(F.col("_dup_starts"), F.array().cast("array<int>"))
     cov = F.array_sort(
@@ -244,21 +237,8 @@ def _with_coverage(
     ).withColumn("_cov", cov)
 
 
-def span_dedup_stats(
-    df: DataFrame,
-    k: int = 8,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    portable: bool = False,
-    use_arrow: bool | None = None,
-) -> DataFrame:
-    """Per-document duplication accounting (all-integer, oracle-friendly):
-
-    id_col, n_tok, removed_occurrences (non-canonical dup-gram starts),
-    covered_tokens (union of their k-windows), kept_n_tok,
-    kept_token_sum (sum of surviving token ids — pins the exact kept
-    set without shipping the arrays).
-    """
+def _coverage_stats(covered: DataFrame, tokens_col: str, id_col: str) -> DataFrame:
+    """The all-integer per-doc accounting of :func:`span_dedup_stats`."""
     toks = F.col(tokens_col)
     covered_sum = F.aggregate(
         F.col("_cov"),
@@ -268,7 +248,7 @@ def span_dedup_stats(
     total_sum = F.aggregate(
         toks, F.lit(0).cast("bigint"), lambda acc, t: acc + t.cast("bigint")
     )
-    return _with_coverage(df, k, tokens_col, id_col, portable, use_arrow).select(
+    return covered.select(
         F.col(id_col),
         F.size(toks).cast("bigint").alias("n_tok"),
         F.col("removed_occurrences").cast("bigint").alias("removed_occurrences"),
@@ -278,19 +258,37 @@ def span_dedup_stats(
     )
 
 
+def span_dedup_stats(
+    df: DataFrame,
+    k: int = 8,
+    tokens_col: str = "tokens",
+    id_col: str = "doc_id",
+    portable: bool = False,
+) -> DataFrame:
+    """Per-document duplication accounting (all-integer, oracle-friendly):
+
+    id_col, n_tok, removed_occurrences (non-canonical dup-gram starts),
+    covered_tokens (union of their k-windows), kept_n_tok,
+    kept_token_sum (sum of surviving token ids — pins the exact kept
+    set without shipping the arrays).
+    """
+    return _coverage_stats(
+        _with_coverage(df, k, tokens_col, id_col, portable), tokens_col, id_col
+    )
+
+
 def remove_duplicate_spans(
     df: DataFrame,
     k: int = 8,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """df with ``tokens_col`` rewritten to drop every token covered by a
     non-canonical duplicated span (first corpus-wide occurrence kept),
     plus ``covered_tokens``. Schema otherwise preserved; ``n_tok``-style
     derived columns are the caller's to refresh."""
-    covered = _with_coverage(df, k, tokens_col, id_col, portable, use_arrow)
+    covered = _with_coverage(df, k, tokens_col, id_col, portable)
     kept = F.filter(
         F.col(tokens_col), lambda t, i: ~F.array_contains(F.col("_cov"), i)
     )
@@ -307,14 +305,13 @@ def span_dedup_summary(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """One-row corpus roll-up: docs/tokens totals, affected docs,
     removed tokens + pct, distinct duplicated grams, removed
     occurrences. Two aggregations (per-doc stats + gram census) — the
     census is re-derived rather than threaded through to keep each
     public function standalone."""
-    stats = span_dedup_stats(df, k, tokens_col, id_col, portable, use_arrow)
+    stats = span_dedup_stats(df, k, tokens_col, id_col, portable)
     per_doc = stats.agg(
         F.count(F.lit(1)).alias("docs_total"),
         F.sum((F.col("covered_tokens") > 0).cast("bigint")).alias("docs_affected"),
@@ -323,7 +320,7 @@ def span_dedup_summary(
         F.sum("removed_occurrences").alias("removed_occurrences"),
     )
     census = (
-        ngram_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
+        ngram_occurrences(df, k, tokens_col, id_col, portable)
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= 2)
@@ -349,7 +346,6 @@ def span_dedup_stats_against(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Incremental duplicated-span accounting of a NEW batch against an
     existing corpus index — "which spans of this crawl drop does the
@@ -370,12 +366,12 @@ def span_dedup_stats_against(
     aggregates per doc exactly like the self-dedup path.
     """
     index_grams = (
-        ngram_occurrences(index, k, tokens_col, id_col, portable, use_arrow)
+        ngram_occurrences(index, k, tokens_col, id_col, portable)
         .select("gram")
         .distinct()
     )
     return span_dedup_stats_against_grams(
-        index_grams, new, k, tokens_col, id_col, portable, use_arrow
+        index_grams, new, k, tokens_col, id_col, portable
     )
 
 
@@ -386,7 +382,6 @@ def span_dedup_stats_against_grams(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """:func:`span_dedup_stats_against` with the index already reduced to
     its distinct ``gram`` column — the entry point for incremental /
@@ -394,39 +389,8 @@ def span_dedup_stats_against_grams(
     instead of re-derived from the corpus each time. ``index_grams``
     must be deduplicated (duplicate gram rows would fan out the join and
     inflate removed_occurrences)."""
-    new_occ = ngram_occurrences(new, k, tokens_col, id_col, portable, use_arrow)
-    removed = (
-        new_occ.join(index_grams, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
-            F.count(F.lit(1)).alias("removed_occurrences"),
-        )
-    )
-    out = new.join(removed, id_col, "left")
-    starts = F.coalesce(F.col("_dup_starts"), F.array().cast("array<int>"))
-    cov = F.array_sort(
-        F.array_distinct(
-            F.flatten(F.transform(starts, lambda p: F.sequence(p, p + k - 1)))
-        )
-    )
-    toks = F.col(tokens_col)
-    out = out.withColumn(
-        "removed_occurrences", F.coalesce("removed_occurrences", F.lit(0))
-    ).withColumn("_cov", cov)
-    covered_sum = F.aggregate(
-        F.col("_cov"),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc + F.element_at(toks, i + 1).cast("bigint"),
-    )
-    total_sum = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + t.cast("bigint")
-    )
-    return out.select(
-        F.col(id_col),
-        F.size(toks).cast("bigint").alias("n_tok"),
-        F.col("removed_occurrences").cast("bigint").alias("removed_occurrences"),
-        F.size("_cov").cast("bigint").alias("covered_tokens"),
-        (F.size(toks) - F.size("_cov")).cast("bigint").alias("kept_n_tok"),
-        (total_sum - covered_sum).alias("kept_token_sum"),
+    new_occ = ngram_occurrences(new, k, tokens_col, id_col, portable)
+    removed = _starts_per_doc(new_occ.join(index_grams, "gram"), id_col)
+    return _coverage_stats(
+        _join_coverage(new, removed, k, id_col), tokens_col, id_col
     )

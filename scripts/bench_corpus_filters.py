@@ -94,10 +94,7 @@ def _child(cpus: int, rows: int) -> None:
         F.size(F.split(F.col("text"), " ")).cast("int").alias("n_tok"),
     )
     ops = {
-        "repetition_arrow": lambda: repetition_summary(d).collect(),
-        "repetition_expr": lambda: repetition_summary(
-            d, use_arrow=False
-        ).collect(),
+        "repetition": lambda: repetition_summary(d).collect(),
         "pii_scan": lambda: pii_summary(d).collect(),
         "pack_plain": lambda: pack_windows(seq, 2048)
         .agg(F.sum("n_windows"))

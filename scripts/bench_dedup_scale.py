@@ -114,7 +114,7 @@ def main() -> None:
 
     # --- cluster formation over the found pairs --------------------------
     t0 = time.time()
-    clusters = D.duplicate_clusters(pairs, algorithm="star")
+    clusters = D.duplicate_clusters(pairs)
     n_cluster_rows = clusters.count()
     n_clusters = clusters.select("cluster").distinct().count()
     t_clusters = time.time() - t0

@@ -127,19 +127,27 @@ def test_simhash_hamming_band_parity_with_bruteforce(spark, docs):
 
 
 def test_minhash_arrow_and_expr_find_same_verified_pairs(spark, dup_docs):
-    """The two signature implementations are different hash families but
-    must verify to the same exact-Jaccard pair set wherever the band
-    recall bound holds."""
-    def verified(impl):
-        sigs = D.minhash_signatures(dup_docs, "text", 64, 3, impl=impl)
-        cand = D.lsh_candidate_pairs(sigs, "doc_id", 64, 32, estimate=False)
-        out = D.ngram_jaccard(dup_docs, cand, "doc_id")
+    """The Arrow signature table's LSH-verified pairs must equal the
+    brute-force answer of the exact n-gram Jaccard expression over ALL
+    pairs (J ≥ 0.5) — 64 hashes / 32 bands miss a J = 0.5 pair with
+    probability ≤ (1-J²)^32 ≈ 1e-4."""
+    sigs = D.minhash_signature_table(dup_docs, "doc_id", "text", 64, 3)
+    cand = D.lsh_candidate_pairs(sigs, "doc_id", 64, 32, estimate=False)
+    ids = dup_docs.select("doc_id")
+    all_pairs = ids.select(F.col("doc_id").alias("a")).crossJoin(
+        ids.select(F.col("doc_id").alias("b"))
+    ).filter(F.col("a") < F.col("b"))
+
+    def verified(pairs):
+        out = D.ngram_jaccard(dup_docs, pairs, "doc_id")
         return {
             (r["a"], r["b"], round(r["jaccard"], 6))
             for r in out.filter(F.col("jaccard") >= 0.5).collect()
         }
 
-    assert verified("arrow") == verified("expr")
+    brute = verified(all_pairs)
+    assert brute == {(1, 2, 1.0), (1, 3, 0.75), (2, 3, 0.75)}
+    assert verified(cand) == brute
 
 
 def test_dedup_corpus_generator_truth(spark, tmp_path):
@@ -458,7 +466,7 @@ def test_minhash_estimate_mae_vs_exact(spark):
     d = spark.read.parquet(f"{SF01}/documents.parquet").filter(
         F.col("doc_id") < 300
     )
-    sigs = D.minhash_signatures(d, "text", 64, 3)
+    sigs = D.minhash_signature_table(d, "doc_id", "text", 64, 3)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", 64, 32)
     exact = D.ngram_jaccard(d, cand.select("a", "b"), "doc_id")
     rows = cand.join(exact, on=["a", "b"]).collect()
@@ -512,26 +520,36 @@ def test_duplicate_clusters_long_chain(spark):
     cl = D.duplicate_clusters(pairs, max_iters=4).collect()
     assert {r["cluster"] for r in cl} == {0}
     assert len(cl) == 13
-    # label propagation advances one hop/round: both variants must FLAG
-    # (not silently return) unconverged labels when max_iters is too low
+    # too few rounds must FLAG (not silently return) unconverged labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters(pairs, max_iters=2, algorithm="label_prop")
+        D.duplicate_clusters(pairs, max_iters=2)
+
+
+def _union_find_labels(edges) -> dict:
+    """Pure-Python union-find: node -> minimum node of its component."""
+    parent = {x: x for e in edges for x in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def test_duplicate_clusters_label_prop_parity(spark):
-    """Both algorithms agree on a mixed component shape."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
-        "a long, b long",
-    )
-    star = {(r["k"], r["cluster"])
-            for r in D.duplicate_clusters(pairs, algorithm="star").collect()}
-    prop = {(r["k"], r["cluster"])
-            for r in D.duplicate_clusters(
-                pairs, algorithm="label_prop"
-            ).collect()}
-    assert star == prop
-    assert {c for _, c in star} == {1, 10, 20}
+    """Star contraction labels == union-find labels on a mixed component
+    shape (a 3-hop path, a 2-hop path and a single edge)."""
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    got = {r["k"]: r["cluster"] for r in D.duplicate_clusters(pairs).collect()}
+    assert got == _union_find_labels(edges)
+    assert set(got.values()) == {1, 10, 20}
 
 
 def test_duplicate_clusters_random_graphs_match_union_find(spark):
@@ -548,20 +566,8 @@ def test_duplicate_clusters_random_graphs_match_union_find(spark):
             tuple(sorted(rng.sample(range(n), 2)))
             for _ in range(m)
         }
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = sorted({x for e in edges for x in e})
-        want = {x: find(x) for x in touched}
+        want = _union_find_labels(sorted(edges))
+        touched = sorted(want)
 
         pairs = spark.createDataFrame(
             [(int(b), int(a)) for a, b in sorted(edges)], "a long, b long"
@@ -788,10 +794,45 @@ def test_ivf_topk_caps_driver_side_queries(spark, embs):
     assert out.count() > 0
 
 
+def _minhash_oracle(texts, num_hashes=64, k=3, seed=42) -> list:
+    """Independent per-doc MinHash: expr_words tokenization (no trim),
+    pandas.util.hash_array word hashes, position-mixed XOR shingles (one
+    whole-doc shingle for docs shorter than k), per-hash min of
+    (a·(h mod p) + b) mod p with p = 2^31-1."""
+    import pandas as pd
+    import pandas.util as pdu
+
+    from data_drift_monitoring_spark.operators._tokenize import expr_words
+
+    p, mask = (1 << 31) - 1, (1 << 64) - 1
+    mix = [0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9]
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, p, size=num_hashes, dtype=np.int64)
+    b = rng.integers(0, p, size=num_hashes, dtype=np.int64)
+    sigs = []
+    for words in expr_words(pd.Series(texts, dtype=object)):
+        hw = [int(h) for h in pdu.hash_array(np.array(words, dtype=object))]
+        windows = (
+            [hw[i : i + k] for i in range(len(hw) - k + 1)]
+            if len(hw) >= k
+            else [hw]
+        )
+        shingles = []
+        for win in windows:
+            v = 0
+            for j, h in enumerate(win):
+                v ^= (h * mix[j]) & mask
+            shingles.append(v % p)
+        hm = np.array(shingles, dtype=np.int64)[:, None]
+        sigs.append(((hm * a + b) % p).min(axis=0).tolist())
+    return sigs
+
+
 def test_minhash_signature_table_bit_identical(spark):
-    """The mapInArrow signature table (zero-copy text path) must produce
-    BIT-IDENTICAL signatures to the pandas-UDF arrow impl for the same
-    seed — same hash family, same shingle core, different transport."""
+    """The mapInArrow signature table must be BIT-IDENTICAL to an
+    independent per-doc numpy oracle on the tokenizer edge cases: None,
+    empty, blank, NBSP / final sigma / dotted İ, VT/FF/CR, trailing
+    tab, docs shorter than k."""
     rows = [
         ("d1", "Hello world hello world"),
         ("d2", ""),
@@ -804,18 +845,13 @@ def test_minhash_signature_table_bit_identical(spark):
         ("d9", "a\x0bb\x0cc\rd\n"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    old = {
-        r["doc_id"]: r["minhash"]
-        for r in D.minhash_signatures(df, "text", 64, 3)
-        .select("doc_id", "minhash")
-        .collect()
-    }
-    new = {
+    got = {
         r["doc_id"]: r["minhash"]
         for r in D.minhash_signature_table(df, "doc_id", "text", 64, 3)
         .collect()
     }
-    assert old == new
+    want = dict(zip([d for d, _ in rows], _minhash_oracle([t for _, t in rows])))
+    assert got == want
 
 
 def test_gram_rows_arrow_matches_portable_convention(spark):

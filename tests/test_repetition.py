@@ -67,32 +67,44 @@ def docs_df(spark):
     )
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_signals_match_python_mirror(docs_df, use_arrow):
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in with_repetition_signals(
-            docs_df, use_arrow=use_arrow
-        ).collect()
-    }
-    for doc_id, text, _ in DOCS:
+def _assert_match_mirror(df, texts):
+    got = {r["doc_id"]: r.asDict() for r in with_repetition_signals(df).collect()}
+    assert set(got) == set(texts)
+    for doc_id, text in texts.items():
         exp = _mirror(text)
+        assert got[doc_id]["n_words"] == exp.pop("n_words"), doc_id
         for k, v in exp.items():
-            assert got[doc_id][k] == pytest.approx(v, abs=1e-12), (
-                doc_id,
-                k,
-            )
+            assert got[doc_id][k] == pytest.approx(v, abs=1e-12), (doc_id, k)
+
+
+@pytest.mark.parametrize("one_batch", [True, False])
+def test_signals_match_python_mirror(spark, docs_df, one_batch):
+    """True: every fixture doc in ONE Arrow batch, so an n-gram leaking
+    across a doc boundary would change a count. False: one doc per
+    batch, so every batch starts at its own doc 0."""
+    texts = {d: t for d, t, _ in DOCS}
+    if one_batch:
+        _assert_match_mirror(docs_df.coalesce(1), texts)
+        return
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        _assert_match_mirror(docs_df, texts)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_arrow_and_expression_paths_identical(spark):
-    """Both paths bit-identical on a larger random corpus — a word-hash
-    collision in the Arrow path would surface here."""
+    """The Arrow counts path matches the collision-free pure-Python
+    mirror on a larger random corpus: exact word counts, fractions to
+    1e-12 — a word-hash collision in the Arrow path would surface here."""
     import random
 
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(50)]
     # edge whitespace mixed in (round-3 ADVICE): trailing/leading
-    # '\n'/'\t'/NBSP must tokenize identically on both paths.
+    # '\n'/'\t'/NBSP must tokenize exactly as the mirror does.
     suffixes = ["", "\n", "\t", " \r", "\xa0tail", "\x0b"]
     rows = [
         (
@@ -104,17 +116,7 @@ def test_arrow_and_expression_paths_identical(spark):
         for i in range(2000)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    cols = [
-        "doc_id",
-        "n_words",
-        "dup_word_frac",
-        "dup_bigram_frac",
-        "dup_trigram_frac",
-        "top_word_frac",
-    ]
-    a = sorted(map(tuple, with_repetition_signals(df, use_arrow=True).select(cols).collect()))
-    b = sorted(map(tuple, with_repetition_signals(df, use_arrow=False).select(cols).collect()))
-    assert a == b
+    _assert_match_mirror(df, {d: t for d, t, _ in rows})
 
 
 def test_flags_and_keep(docs_df):

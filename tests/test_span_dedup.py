@@ -128,7 +128,7 @@ def test_summary_and_conservation(spark, planted):
 
 
 def test_arrow_and_expression_paths_agree(spark):
-    """The Arrow gram combiner and the xxhash64 expression twin hash
+    """The Arrow gram combiner and the portable md5 expression path hash
     differently but must produce IDENTICAL dedup output on data with
     real duplicate structure."""
     import random
@@ -143,8 +143,8 @@ def test_arrow_and_expression_paths_agree(spark):
             toks = toks[:p] + span + toks[p:]
         docs.append((f"d{i:03d}", toks))
     df = spark.createDataFrame(docs, "doc_id string, tokens array<int>").repartition(5)
-    a = {r["doc_id"]: tuple(r)[1:] for r in SD.span_dedup_stats(df, k=5, use_arrow=True).collect()}
-    b = {r["doc_id"]: tuple(r)[1:] for r in SD.span_dedup_stats(df, k=5, use_arrow=False).collect()}
+    a = {r["doc_id"]: tuple(r)[1:] for r in SD.span_dedup_stats(df, k=5).collect()}
+    b = {r["doc_id"]: tuple(r)[1:] for r in SD.span_dedup_stats(df, k=5, portable=True).collect()}
     assert a == b
     assert sum(r[2] for r in a.values()) > 0  # covered_tokens: real work
 
